@@ -52,6 +52,14 @@ object Bench {
     else (s(s.size / 2 - 1) + s(s.size / 2)) / 2.0
   }
 
+  /** Headline total over per-query medians, where -1 marks a failed
+    * query. Any failure makes the total -1 (invalid) instead of dropping
+    * out of the sum: a query that starts throwing must not make the
+    * headline faster.
+    */
+  private[graft] def headlineTotal(medians: Seq[Double]): Double =
+    if (medians.exists(_ < 0)) -1.0 else medians.sum
+
   /** The compact final stdout line. The driver keeps only the LAST 2000
     * chars of stdout and parses that tail as JSON; the full per-query
     * line (~12 KB at 138 queries) overflows the window, so rounds 1–7
@@ -69,7 +77,9 @@ object Bench {
       topN: Int = 25): String = {
     val slowest = medians.filter(_._2 >= 0).sortBy(-_._2).take(topN)
       .map { case (k, v) => s""""$k":${fmt(v, 3)}""" }.mkString("{", ",", "}")
+    val nFailed = medians.count(_._2 < 0)
     s"""{"metric":"total","value":${fmt(total, 3)},"unit":"sec","sf":"$sfDir",""" +
+      s""""n_failed":$nFailed,"total_valid":${nFailed == 0},""" +
       s""""queries_total":${medians.size},"queries":$slowest,""" +
       s""""queries_note":"slowest $topN of ${medians.size}; full per-query map in $outFile",""" +
       s""""passes":$passes,"load_warning":$loadWarning,""" +
@@ -527,7 +537,8 @@ object Bench {
     val qs = results.map { case (k, v, _) => s""""$k":$v""" }.mkString("{", ",", "}")
     val raw = results.map { case (k, _, ts) => s""""$k":[${ts.mkString(",")}]""" }
       .mkString("{", ",", "}")
-    val total = results.collect { case (_, v, _) if v >= 0 => v }.sum
+    val total = headlineTotal(results.map(_._2))
+    val nFailed = results.count(_._2 < 0)
     // Raw-arm stamp: per-query medians + passes, the arm's total, and
     // the SAME cohort's bucketed total from the headline arm so the
     // layout delta reads off one object.
@@ -540,9 +551,8 @@ object Bench {
         .mkString("{", ",", "}")
       val p = rms.map { case (k, _, ts) => s""""$k":[${ts.mkString(",")}]""" }
         .mkString("{", ",", "}")
-      val rawTotal = rms.collect { case (_, v, _) if v >= 0 => v }.sum
-      val bktTotal = results.collect {
-        case (k, v, _) if affected.contains(k) && v >= 0 => v }.sum
+      val rawTotal = headlineTotal(rms.map(_._2))
+      val bktTotal = headlineTotal(results.collect { case (k, v, _) if affected.contains(k) => v })
       (s""","raw_arm":{"note":"backbone-affected queries re-timed on raw parquet""" +
         s""" (the DuckDB comparator's layout), same pass-major median-of-$passes""" +
         s""" protocol in the same session; the headline queries above rode the""" +
@@ -575,7 +585,8 @@ object Bench {
     // recomputed, not the launch-time snapshot — see [[finalLoadWarning]]
     val loadWarningOut = finalLoadWarning(warn1min, warn5min, loadLimit,
       load0, extFrac)
-    val json = s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,""" +
+    val json = s"""{"metric":"total","value":$total,"unit":"sec",""" +
+      s""""n_failed":$nFailed,"total_valid":${nFailed == 0},"queries":$qs,""" +
       s""""aqe":$aqe,"shuffle_partitions":$shuffle,""" +
       s""""bucketed":$bucketed,"bucket_build_sec":${fmt(bucketBuildSec, 2)}$rawArmJson,""" +
       s""""extra_conf":"${sys.env.getOrElse("SPARK_GRAFT_CONF", "")}",""" +

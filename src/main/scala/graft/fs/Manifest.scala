@@ -1,7 +1,7 @@
 package graft.fs
 
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
+import org.apache.hadoop.fs.{FileStatus, Path}
 import org.apache.spark.sql.{Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
@@ -94,8 +94,7 @@ object Manifest {
   }
 
   /** Driver-side iterative DFS over one root (reference's explicit-stack
-    * walk, DistExec.java:549-609). Fine for moderate trees; use
-    * [[listDistributed]] when the fan-out is large.
+    * walk, DistExec.java:549-609).
     */
   def listRoot(conf: Configuration, root: String): Seq[FileEntry] = {
     val rootPath = new Path(root)
@@ -136,15 +135,12 @@ object Manifest {
     * rather than merging namespaces). A single-file root becomes its file
     * name either way.
     */
-  private def underSourceNameEntry(e: FileEntry): FileEntry = {
+  private def underSourceName(e: FileEntry): FileEntry = {
     val name = new Path(e.root).getName
     if (name.isEmpty) e // root is "/" — nothing to nest under
     else if (e.relativeDst == ".") e.copy(relativeDst = name)
     else e.copy(relativeDst = s"$name/${e.relativeDst}")
   }
-
-  private def underSourceName(es: Seq[FileEntry]): Seq[FileEntry] =
-    es.map(underSourceNameEntry)
 
   /** Build the manifest for several roots (multiple `<srcurl>` args are an
     * implicit union — reference DistExec.java:549 loop).
@@ -161,7 +157,7 @@ object Manifest {
     val conf = spark.sparkContext.hadoopConfiguration
     val entries = roots.flatMap { r =>
       val es = listRoot(conf, r)
-      if (!special) underSourceName(es)
+      if (!special) es.map(underSourceName)
       else
         // A single-FILE root contributes itself under its file name.
         es.map { e =>
@@ -171,95 +167,6 @@ object Manifest {
         }
     }
     spark.createDataset(entries)
-  }
-
-  /** Distributed breadth-first listing: each wave lists its directories on
-    * executors. This removes the reference's driver-side listing
-    * bottleneck (single-threaded stack walk, DistExec.java:558-608) for
-    * 100 TB-scale trees with wide fan-out.
-    *
-    * The directory frontier stays a DATASET between waves — the driver
-    * never sees path strings, only one count per wave (a tree with
-    * millions of directories per level would otherwise funnel every path
-    * through the driver between waves). Each wave's output is
-    * checkpointed, so wave N's lineage does not replay waves 1..N−1, and
-    * the frontier repartitions by path so listing fan-out spreads across
-    * executors regardless of which wave produced the paths.
-    */
-  def listDistributed(spark: SparkSession, roots: Seq[String], maxWaves: Int = 64,
-      special: Boolean = true): Dataset[FileEntry] = {
-    import spark.implicits._
-    val conf = spark.sparkContext.hadoopConfiguration
-    // Executors must see the driver's effective Hadoop config (FS
-    // credentials, defaultFS, spark.hadoop.* overrides) — a bare
-    // `new Configuration()` would load classpath defaults only.
-    val confEntries = hadoopConfEntries(conf)
-    val parallelism = math.max(1, spark.sparkContext.defaultParallelism)
-    def listWave(frontier: Dataset[(String, String)]): Dataset[FileEntry] = frontier
-      .repartition(parallelism, col("_1"))
-      .mapPartitions { it =>
-        val c = restoreConf(confEntries)
-        it.flatMap { case (dir, root) =>
-          val p = new Path(dir)
-          val fs = p.getFileSystem(c)
-          val self = fs.getFileStatus(p)
-          val selfEntry = toEntry(self, root, makeRelative(root, dir).getOrElse(dir))
-          if (!self.isDirectory) Iterator(selfEntry)
-          else Iterator(selfEntry) ++ fs.listStatus(p).iterator.map { st =>
-            val cp = st.getPath.toString
-            toEntry(st, root, makeRelative(root, cp).getOrElse(cp))
-          }
-        }
-      }
-    // Seed frontier: the roots themselves (driver-side stat only, cheap).
-    val seed: Seq[(String, String)] = roots.map { r =>
-      val p = new Path(r)
-      val fs = p.getFileSystem(conf)
-      val q = fs.getFileStatus(p).getPath.toString
-      (q, q)
-    }
-    var frontier = spark.createDataset(seed)
-    var frontierSize = seed.size.toLong
-    var acc = spark.emptyDataset[FileEntry]
-    val intermediates = mutable.ArrayBuffer.empty[Dataset[_]]
-    var waves = 0
-    while (frontierSize > 0 && waves < maxWaves) {
-      val persisted = listWave(frontier).localCheckpoint(true)
-      intermediates += persisted
-      acc = acc.union(persisted)
-      // Next frontier: directories DISCOVERED this wave (children only —
-      // a wave's own input dirs re-appear as selfEntry rows, subtracted
-      // by the except; a child dir enters the frontier exactly once
-      // since trees have no cycles).
-      frontier = persisted
-        .filter(e => e.isDir)
-        .map(e => (e.path, e.root))
-        .except(frontier)
-        .localCheckpoint(true)
-      intermediates += frontier
-      frontierSize = frontier.count() // ONE number to the driver per wave
-      waves += 1
-    }
-    // Truncation must be LOUD: files below the depth cap would silently
-    // vanish from the manifest (and the exec job) otherwise.
-    if (frontierSize > 0)
-      throw new IllegalStateException(
-        s"tree deeper than maxWaves=$maxWaves; $frontierSize director(ies) unlisted — raise maxWaves")
-    // Same root-choice semantics as [[build]]: nest under the source name
-    // unless this is the special single-src-into-new-dst job; a
-    // single-FILE root contributes its file name either way.
-    val isSpecial = special
-    val fixed = acc.map { e =>
-      if (!isSpecial) underSourceNameEntry(e)
-      else if (e.relativeDst == "." && !e.isDir)
-        e.copy(relativeDst = new Path(e.path).getName)
-      else e
-    }
-    // Dirs appear both as a wave input and as their parent's child row.
-    // Materialize (lineage-truncated), then release the per-wave blocks.
-    val result = fixed.dropDuplicates("path", "root").localCheckpoint(true)
-    intermediates.foreach(_.unpersist())
-    result
   }
 
   /** Driver-side snapshot of a Hadoop Configuration as serializable pairs. */
@@ -301,42 +208,16 @@ object Manifest {
 
   /** Size-weighted bin packing: assign each file a split id via running
     * byte sum / target — the reference's greedy `getSplits`
-    * (DistExec.java:132-177) as window expressions.
-    *
-    * Two-level distributed prefix sum, NOT a single per-root window: a
-    * single `partitionBy(root)` window puts a whole source tree on one
-    * task, which serializes exactly when it matters (one 100 TB root).
-    * Instead: (1) bucket each file by the first character of its
-    * path-after-root — buckets are CONTIGUOUS in path order, so per-
-    * (root, bucket) local running sums + (2) a tiny per-root window over
-    * bucket byte totals (≤ 257 rows per root) recompose the EXACT global
-    * running sum: `cum = local_cum + offset(previous buckets)`. Bit-
-    * identical bins to the serial formulation (asserted in
-    * ManifestSpec), with per-bucket parallelism.
+    * (DistExec.java:132-177) as one per-root running-sum window. A file
+    * starts in the bin its start offset falls in, so a bin exceeds the
+    * target only through its last file, and each root restarts at bin 0.
     */
   def binPack(manifest: Dataset[FileEntry], targetBytes: Long): Dataset[org.apache.spark.sql.Row] = {
-    val files = manifest.filter(!col("isDir"))
-      // First char of the path below the root ('' for a root that is
-      // itself a file — sorts before every child, its own bucket). The
-      // trailing-slash trim matters for filesystem roots ('file:/',
-      // 's3a://bucket/'): without it the bucket is the child's SECOND
-      // character and bucket order no longer matches path order.
-      .withColumn("bkt",
-        expr("substring(path, length(trim(TRAILING '/' FROM root)) + 2, 1)"))
-    val wLocal = Window.partitionBy(col("root"), col("bkt")).orderBy(col("path"))
+    val w = Window.partitionBy(col("root")).orderBy(col("path"))
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val wOffset = Window.partitionBy(col("root")).orderBy(col("bkt"))
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val offsets = files.groupBy(col("root"), col("bkt"))
-      .agg(sum(col("length")).as("bkt_bytes"))
-      .withColumn("off", coalesce(sum(col("bkt_bytes")).over(wOffset), lit(0L)))
-      .select(col("root"), col("bkt"), col("off"))
-    files
-      .withColumn("lcum", sum(col("length")).over(wLocal))
-      .join(offsets, Seq("root", "bkt"))
-      .withColumn("cum", col("lcum") + col("off"))
+    manifest.filter(!col("isDir"))
+      .withColumn("cum", sum(col("length")).over(w))
       .withColumn("bin", floor((col("cum") - col("length")) / lit(targetBytes)))
-      .drop("bkt", "lcum", "off")
   }
 
   /** Map-count rule: `max(min(fileCount, cap), 1)` — file-count based, not

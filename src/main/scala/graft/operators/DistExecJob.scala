@@ -1,8 +1,10 @@
 package graft.operators
 
-import java.io.{ByteArrayInputStream, IOException, OutputStream}
+import java.io.{IOException, OutputStream}
 
-import graft.exec.{CommandLine, ExitPolicy, ProcessRunner}
+import scala.util.Using
+
+import graft.exec.{CommandLine, Executor}
 import graft.fs.{FileEntry, Manifest}
 
 import org.apache.hadoop.conf.Configuration
@@ -25,14 +27,12 @@ final case class ExecStatus(
 
 final case class ExecCounters(executed: Long, failed: Long, bytesExecuted: Long, bytesWritten: Long)
 
+/** The CLI's job options: `-m` (None → [[DistExecJob.sessionMapCap]])
+  * and `-redirectErrorToOut`.
+  */
 final case class DistExecOptions(
     maxMaps: Option[Int] = None,
-    redirectErrorToOut: Boolean = false,
-    acceptExitCodes: Set[Int] = Set(0),
-    targetBytesPerMap: Long = 256L * 1024 * 1024, // reference BYTES_PER_MAP, DistExec.java:75
-    // None → derived from the session at run time (the reference's
-    // 20 × live-cluster-nodes, DistExec.java:419-426); Some(n) pins it.
-    defaultMapCap: Option[Int] = None)
+    redirectErrorToOut: Boolean = false)
 
 /** The core operator: pipe every file of the source trees through a shell
   * command, writing stdout (and a `.stderr` sidecar) to a mirrored path
@@ -50,9 +50,11 @@ final case class DistExecOptions(
   *    execution is SAFE here (the reference had to disable it,
   *    DistExec.java:443-445);
   *  - streams the source file through the child process (never
-  *    materializes it in memory — no `binaryFile` 2 GB limit);
-  *  - distributed listing available for wide trees
-  *    ([[Manifest.listDistributed]]).
+  *    materializes it in memory — no `binaryFile` 2 GB limit).
+  *
+  * Listing stays on the driver, as in the reference
+  * ([[Manifest.build]]); the manifest, split planning and execution
+  * after it are Datasets.
   */
 object DistExecJob {
 
@@ -82,52 +84,23 @@ object DistExecJob {
       command: String,
       options: DistExecOptions = DistExecOptions()): Dataset[ExecStatus] = {
     require(srcs.nonEmpty, "at least one source required")
+    import spark.implicits._
+    val conf = spark.sparkContext.hadoopConfiguration
     // Secure clusters: grab delegation tokens for every src/dst
     // filesystem before touching them (reference checkSrcPath,
     // DistExec.java:209-226). No-op without kerberos.
-    Manifest.obtainDelegationTokens(
-      spark.sparkContext.hadoopConfiguration, srcs :+ dst)
-    // Reference root choice (DistExec.java:546-553): only the special
-    // single-src-into-nonexistent-dst job spills a directory's CONTENTS
-    // into dst; otherwise every source mirrors under dst/<srcname>/...,
-    // so multiple sources (or a rerun into an existing dst) keep disjoint
-    // namespaces.
-    runManifest(spark, Manifest.build(spark, srcs, manifestSpecial(spark, srcs, dst)),
-      dst, command, options)
-  }
-
-  /** The reference's job-level `special` flag (DistExec.java:546):
-    * exactly one source into a dst that does not exist yet. Use this for
-    * the `special` argument of [[Manifest.build]]/[[Manifest.listDistributed]]
-    * when building a manifest for [[runManifest]] yourself.
-    */
-  def manifestSpecial(spark: SparkSession, srcs: Seq[String], dst: String): Boolean = {
-    val dstPath = new Path(dst)
-    val dstFs = dstPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    srcs.size == 1 && !dstFs.exists(dstPath)
-  }
-
-  /** Run over a pre-built manifest — pass [[Manifest.listDistributed]]'s
-    * output here when the tree is too wide for driver-side listing.
-    * IMPORTANT: build the manifest with the SAME `special` value
-    * [[run]] would compute ([[manifestSpecial]]) or the root-choice
-    * semantics (nest under dst/<srcname> vs contents-into-dst) will not
-    * match the reference's.
-    */
-  def runManifest(
-      spark: SparkSession,
-      manifest: Dataset[FileEntry],
-      dst: String,
-      command: String,
-      options: DistExecOptions = DistExecOptions()): Dataset[ExecStatus] = {
-    import spark.implicits._
-    CommandLine.translate(command) // fail fast on unbalanced quotes (R1/R11)
-
-    Manifest.checkDuplication(manifest)
-
-    val conf = spark.sparkContext.hadoopConfiguration
+    Manifest.obtainDelegationTokens(conf, srcs :+ dst)
     val dstPath = new Path(dst)
     val dstFs = dstPath.getFileSystem(conf)
+    val dstStatus = if (dstFs.exists(dstPath)) Some(dstFs.getFileStatus(dstPath)) else None
+
+    // Job-level root choice (DistExec.java:546-553): only a single source
+    // into a nonexistent dst spills a directory's CONTENTS into dst;
+    // otherwise every source mirrors under dst/<srcname>/..., so multiple
+    // sources (or a rerun into an existing dst) keep disjoint namespaces.
+    val manifest = Manifest.build(spark, srcs, special = srcs.size == 1 && dstStatus.isEmpty)
+    CommandLine.translate(command) // fail fast on unbalanced quotes (R1/R11)
+    Manifest.checkDuplication(manifest)
 
     // Planning stats WITHOUT collecting the manifest: at 100 TB the
     // manifest is millions of rows — it must stay a Dataset end to end
@@ -142,22 +115,24 @@ object DistExecJob {
     val totalBytes = math.max(if (statsRow.isNullAt(1)) 0L else statsRow.getLong(1), 1L)
     val dirCount = if (statsRow.isNullAt(2)) 0L else statsRow.getLong(2)
 
-    // Reference "special" single-file case (DistExec.java:545,
-    // ExecFilesMapper.java:131-139): exactly one src file into a
-    // nonexistent/non-dir dst → dst itself is the output file.
-    val special = fileCount == 1 && dirCount == 0 &&
-      (!dstFs.exists(dstPath) || dstFs.getFileStatus(dstPath).isFile)
+    // File-level root choice (DistExec.java:545, ExecFilesMapper.java:131-139):
+    // exactly one src file into a nonexistent/non-dir dst → dst itself
+    // is the output file.
+    val special = fileCount == 1 && dirCount == 0 && dstStatus.forall(_.isFile)
 
-    val confEntriesForDirs = Manifest.hadoopConfEntries(conf)
-    val dstStrForDirs = dstPath.toString
+    // Ship the driver's effective Hadoop config (credentials, defaultFS,
+    // spark.hadoop.* overrides) — a bare `new Configuration()` on the
+    // executor would see classpath defaults only.
+    val confEntries = Manifest.hadoopConfEntries(conf)
+    val dstStr = dstPath.toString
     // Dest-dir semantics (DistExec.java:543-545,623-628): materialize the
     // dst root when more than one source entry lands in it, then every
     // manifest dir (preserving EMPTY dirs) — created from executors, so a
     // million-directory tree never funnels through the driver.
     if (!special) dstFs.mkdirs(dstPath)
     dirs.foreachPartition { (it: Iterator[FileEntry]) =>
-      val c = Manifest.restoreConf(confEntriesForDirs)
-      val root = new Path(dstStrForDirs)
+      val c = Manifest.restoreConf(confEntries)
+      val root = new Path(dstStr)
       val fs = root.getFileSystem(c)
       it.foreach(d => fs.mkdirs(new Path(root, d.relativeDst)))
     }
@@ -165,8 +140,7 @@ object DistExecJob {
     val jobId = java.lang.Long.toString(System.nanoTime(), 36)
     val tmpRoot = new Path(if (special) dstPath.getParent else dstPath, s"_distexec_tmp_$jobId")
 
-    val numTasks = Manifest.mapCount(fileCount,
-      options.maxMaps.orElse(options.defaultMapCap).getOrElse(sessionMapCap(spark)))
+    val numTasks = Manifest.mapCount(fileCount, options.maxMaps.getOrElse(sessionMapCap(spark)))
     val target = math.max(totalBytes / numTasks, 1L)
 
     val binned = Manifest
@@ -176,35 +150,13 @@ object DistExecJob {
 
     val cmd = command
     val redirect = options.redirectErrorToOut
-    val accept = options.acceptExitCodes
     val tmpRootStr = tmpRoot.toString
-    val dstStr = dstPath.toString
     val isSpecial = special
-    // Ship the driver's effective Hadoop config (credentials, defaultFS,
-    // spark.hadoop.* overrides) — a bare `new Configuration()` on the
-    // executor would see classpath defaults only.
-    val confEntries = Manifest.hadoopConfEntries(conf)
 
     val statuses = binned.mapPartitions { it =>
       val taskConf = Manifest.restoreConf(confEntries)
-      val attempt = TaskContext.get() match {
-        case null => "local"
-        case tc   => s"${tc.stageAttemptNumber()}-${tc.taskAttemptId()}"
-      }
-      // Task-private dst FileSystem: checksum writing is disabled for the
-      // mirrored tree (no .crc sidecars), and that flag must NOT leak into
-      // the JVM-wide FileSystem.get cache shared by every other user of
-      // this filesystem on the executor — so newInstance, closed with the
-      // task.
-      val dstFsTask = FileSystem.newInstance(new Path(dstStr).toUri, taskConf)
-      dstFsTask.setWriteChecksum(false)
-      TaskContext.get() match {
-        case null => ()
-        case tc => tc.addTaskCompletionListener[Unit] { _ =>
-          try dstFsTask.close() catch { case _: IOException => () }
-        }
-      }
-      it.map(e => executeOne(taskConf, dstFsTask, e, dstStr, tmpRootStr, attempt, cmd, redirect, accept, isSpecial))
+      val (dstFsTask, attempt) = taskFileSystem(dstStr, taskConf)
+      it.map(e => executeOne(taskConf, dstFsTask, e, dstStr, tmpRootStr, attempt, cmd, redirect, isSpecial))
     }
 
     // Eager + lineage-truncated: re-running the returned Dataset must NOT
@@ -254,22 +206,8 @@ object DistExecJob {
     status.filter(s => s.ok && s.bytesOut > 0).map(_.relativeDst)
       .repartition(1)
       .mapPartitions { it =>
-        val c = Manifest.restoreConf(confEntries)
         val root = new Path(dstStr)
-        // Task-private instance: no .crc sidecar for the merged file, and
-        // no mutation of the executor's cached FileSystem.
-        val taskFs = FileSystem.newInstance(root.toUri, c)
-        taskFs.setWriteChecksum(false)
-        TaskContext.get() match {
-          case null => ()
-          case tc => tc.addTaskCompletionListener[Unit] { _ =>
-            try taskFs.close() catch { case _: IOException => () }
-          }
-        }
-        val attempt = TaskContext.get() match {
-          case null => "local"
-          case tc   => s"${tc.stageAttemptNumber()}-${tc.taskAttemptId()}"
-        }
+        val (taskFs, attempt) = taskFileSystem(dstStr, Manifest.restoreConf(confEntries))
         val tmp = new Path(root, s"_singleout_tmp_$attempt")
         val out = taskFs.create(tmp, true)
         try {
@@ -321,6 +259,26 @@ object DistExecJob {
 
   // ---------------------------------------------------------------- task side
 
+  /** The task's private dst FileSystem and its attempt id (`"local"`
+    * outside a task), which makes tmp paths attempt-unique. Checksum
+    * writing is disabled (no .crc sidecars), and that flag must NOT leak
+    * into the JVM-wide FileSystem.get cache shared by every other user of
+    * this filesystem on the executor — so newInstance, closed with the
+    * task.
+    */
+  private def taskFileSystem(dst: String, conf: Configuration): (FileSystem, String) = {
+    val fs = FileSystem.newInstance(new Path(dst).toUri, conf)
+    fs.setWriteChecksum(false)
+    TaskContext.get() match {
+      case null => (fs, "local")
+      case tc =>
+        tc.addTaskCompletionListener[Unit] { _ =>
+          try fs.close() catch { case _: IOException => () }
+        }
+        (fs, s"${tc.stageAttemptNumber()}-${tc.taskAttemptId()}")
+    }
+  }
+
   /** Lazily-created output: no file materializes unless the stream gets
     * bytes — so empty stdout/stderr produces NO dst file (reference
     * LazyCreateOutputStream, ExecFilesMapper.java:46-80).
@@ -352,7 +310,6 @@ object DistExecJob {
       attempt: String,
       command: String,
       redirectErrorToOut: Boolean,
-      acceptExitCodes: Set[Int],
       special: Boolean): ExecStatus = {
     val srcPath = new Path(e.path)
     val dstFile =
@@ -362,15 +319,13 @@ object DistExecJob {
     val tmpErr = tmpFile.suffix(".stderr")
     try {
       val srcFs = srcPath.getFileSystem(conf)
-      val argv = CommandLine.translate(command)
-      val in = srcFs.open(srcPath)
       val out = new LazyOut(dstFs, tmpFile)
       val err = new LazyOut(dstFs, tmpErr)
-      val res =
-        try ProcessRunner.run(argv, in, out, err, redirectErrorToOut)
-        finally { try in.close() catch { case _: IOException => () }; out.close(); err.close() }
-      if (!ExitPolicy.accepts(argv, res.exitCode, acceptExitCodes))
-        throw new IOException(s"exit ${res.exitCode} from '$command' on ${e.path}")
+      // Each stream closes even when another's close throws (an HDFS
+      // close can, e.g. on quota); the first failure is rethrown.
+      val res = Using.resources(srcFs.open(srcPath), out, err) { (in, o, er) =>
+        Executor.execute(command, in, o, er, redirectErrorToOut)
+      }
       // Atomic publish: delete-existing + rename tmp→dst, per stream
       // (reference rename, ExecFilesMapper.java:156-170). No tmp ⇒ no file.
       if (out.created) rename(dstFs, tmpFile, dstFile)

@@ -1266,8 +1266,8 @@ object ExtOps {
     // bin-pack shape applied to sequence packing), then per-pack stats.
     // Deterministic packing = reproducible training batches.
     //
-    // The running sum is a TWO-LEVEL DISTRIBUTED PREFIX SUM (the
-    // Manifest.binPack shape), not a per-lang window: lang has a handful
+    // The running sum is a TWO-LEVEL DISTRIBUTED PREFIX SUM (the a3
+    // shape), not a per-lang window: lang has a handful
     // of values, so `Window.partitionBy(lang)` funnels the whole corpus
     // through ~4 tasks — billions of rows per task at 100 TB. Instead
     // (1) bucket by doc_id range (buckets are contiguous in doc_id

@@ -70,14 +70,14 @@ object GroupA {
     }),
 
     // A3 — size-weighted bin packing (reference getSplits greedy packing,
-    // DistExec.java:132-177) spelled as the TWO-LEVEL distributed prefix
-    // sum (the production R7 shape, Manifest.binPack): a per-root window
-    // alone serializes exactly when it matters — the common single-root
-    // job puts the whole 100 TB tree through ONE task. Level 1: bucket
-    // by a fixed-length prefix of the path-below-root (any fixed prefix
-    // is a coarsening of lexicographic order, so buckets are CONTIGUOUS
-    // in path order; 8 chars ≈ the first directory component here —
-    // prefix length is a knob, Manifest.binPack uses 1), local running
+    // DistExec.java:132-177) spelled as a TWO-LEVEL distributed prefix
+    // sum. Manifest.binPack uses the serial per-root window, because its
+    // input is a manifest the driver has just listed; as a query, a
+    // per-root window alone would put a whole 100 TB tree through ONE
+    // task. Level 1: bucket by a fixed-length prefix of the
+    // path-below-root (any fixed prefix is a coarsening of lexicographic
+    // order, so buckets are CONTIGUOUS in path order; 8 chars ≈ the first
+    // directory component here — prefix length is a knob), local running
     // sums per (root, bucket). Level 2: a tiny per-root window over
     // bucket byte totals provides each bucket's offset. cum = lcum + off
     // is bit-identical to the serial spelling — the unchanged oracle

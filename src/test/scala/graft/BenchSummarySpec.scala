@@ -43,6 +43,20 @@ class BenchSummarySpec extends AnyFunSuite {
     assert(line.endsWith("}"))
   }
 
+  test("a failed query invalidates the total instead of shrinking it") {
+    assert(Bench.headlineTotal(Seq(1.0, 2.5)) == 3.5)
+    assert(Bench.headlineTotal(Seq(1.0, -1.0, 2.5)) == -1.0)
+    def line(ms: Seq[(String, Double)]) =
+      Bench.summaryLine(ms, Bench.headlineTotal(ms.map(_._2)), "/x", 3,
+        loadWarning = false, "0 0 0", "0 0 0", "0 0 0", 0.0, 0.0, 2.0, "", "out.json")
+    val failed = line(Seq("a" -> 1.0, "b" -> -1.0))
+    assert(failed.contains(""""value":-1.000"""), failed)
+    assert(failed.contains(""""n_failed":1,"total_valid":false"""), failed)
+    val clean = line(Seq("a" -> 1.0, "b" -> 2.0))
+    assert(clean.contains(""""value":3.000"""), clean)
+    assert(clean.contains(""""n_failed":0,"total_valid":true"""), clean)
+  }
+
   test("summary line is locale-proof (comma-decimal default locale)") {
     val prev = java.util.Locale.getDefault
     try {

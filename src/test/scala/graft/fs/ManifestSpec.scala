@@ -45,13 +45,6 @@ class ManifestSpec extends AnyFunSuite with SparkSpec {
     assert(m.head.relativeDst == "a.txt" && !m.head.isDir)
   }
 
-  test("distributed listing matches driver-side listing") {
-    val root = mkTree()
-    val drv = Manifest.build(spark, Seq(root.toString)).collect().map(_.path).sorted
-    val dist = Manifest.listDistributed(spark, Seq(root.toString)).collect().map(_.path).sorted
-    assert(dist.toSeq == drv.toSeq)
-  }
-
   test("duplicate destinations across roots raise DuplicationException") {
     val r1 = mkTree()
     val r2 = mkTree()
@@ -83,28 +76,32 @@ class ManifestSpec extends AnyFunSuite with SparkSpec {
     }
   }
 
-  test("bin packing: two-level prefix sum equals the serial per-root window") {
+  test("bin packing: hand-computed bins for two roots and a single-file root") {
     import spark.implicits._
-    import org.apache.spark.sql.expressions.Window
-    import org.apache.spark.sql.functions._
-    // Mixed-prefix tree: several first-char buckets per root + a file root
-    val files = (
-      (1 to 40).map(i => FileEntry(s"/r/a$i", "/r", s"a$i", (i % 5 + 1) * 7L, isDir = false, 0L)) ++
-      (1 to 40).map(i => FileEntry(s"/r/m$i", "/r", s"m$i", (i % 3 + 1) * 11L, isDir = false, 0L)) ++
-      (1 to 40).map(i => FileEntry(s"/r/z$i", "/r", s"z$i", (i % 7 + 1) * 5L, isDir = false, 0L)) ++
-      Seq(FileEntry("/single.bin", "/single.bin", "single.bin", 42L, isDir = false, 0L)))
-    val ds = spark.createDataset(files)
-    val twoLevel = Manifest.binPack(ds, 50L)
+    def f(root: String, name: String, len: Long) =
+      FileEntry(s"$root/$name", root, name, len, isDir = false, 0L)
+    // Rows arrive out of path order and with dirs mixed in: the packing
+    // sorts by path within each root and skips dirs.
+    val files = Seq(
+      f("/r", "c", 30), f("/r", "a", 40), FileEntry("/r/d", "/r", "d", 0L, isDir = true, 0L),
+      f("/r", "b", 70), f("/r", "e", 10), f("/r", "d/x", 60),
+      f("/s", "q", 100), f("/s", "p", 20),
+      FileEntry("/one.bin", "/one.bin", "one.bin", 500L, isDir = false, 0L))
+    val got = Manifest.binPack(spark.createDataset(files), 50L)
       .select($"path", $"cum", $"bin").collect()
-      .map(r => (r.getString(0), r.getLong(1), r.getLong(2))).toSet
-    val wSerial = Window.partitionBy($"root").orderBy($"path")
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val serial = ds.filter(!$"isDir")
-      .withColumn("cum", sum($"length").over(wSerial))
-      .withColumn("bin", floor(($"cum" - $"length") / lit(50L)))
-      .select($"path", $"cum", $"bin").collect()
-      .map(r => (r.getString(0), r.getLong(1), r.getLong(2))).toSet
-    assert(twoLevel == serial)
+      .map(r => (r.getString(0), (r.getLong(1), r.getLong(2)))).toMap
+    // bin = floor((cum - length) / 50): the bin a file's START offset
+    // falls in, restarting at 0 for every root.
+    val want = Map(
+      "/r/a" -> (40L, 0L),   // [0, 40)
+      "/r/b" -> (110L, 0L),  // [40, 110): starts in bin 0, overflows it
+      "/r/c" -> (140L, 2L),  // [110, 140)
+      "/r/d/x" -> (200L, 2L), // [140, 200)
+      "/r/e" -> (210L, 4L),  // [200, 210)
+      "/s/p" -> (20L, 0L),   // second root restarts at 0
+      "/s/q" -> (120L, 0L),  // [20, 120)
+      "/one.bin" -> (500L, 0L)) // a single-file root is one bin
+    assert(got == want)
   }
 
   test("map count rule: min(files, cap), at least 1") {

@@ -228,6 +228,34 @@ class DistExecJobSpec extends AnyFunSuite with SparkSpec {
     assert(head == line)
   }
 
+  test("a stdout close failure still closes stderr, fails the file and leaves no tmp") {
+    // An HDFS close can throw (e.g. on quota). Every stream must still be
+    // closed, or the .stderr tmp (and on HDFS its lease) stays open for
+    // the executor's life while the failure path deletes the file under it.
+    import org.apache.hadoop.conf.Configuration
+    val conf = new Configuration()
+    val fs = new CloseFailingFileSystem
+    fs.initialize(java.net.URI.create("file:///"), conf)
+    val src = Files.createTempDirectory("graft-close-src")
+    Files.writeString(src.resolve("f.txt"), "payload\n")
+    val dst = tmpDst()
+    Files.createDirectories(dst)
+    val entry = graft.fs.FileEntry(src.resolve("f.txt").toString,
+      src.toString, "f.txt", 8L, isDir = false, 0L)
+    val tmpRoot = dst.resolve("_distexec_tmp_close")
+    val st = DistExecJob.executeOne(conf, fs, entry, dst.toString, tmpRoot.toString,
+      "0-1", "sh -c 'cat; echo e >&2'", redirectErrorToOut = false, special = false)
+    assert(!st.ok && st.error.startsWith("FAIL f.txt"), st)
+    assert(st.error.contains("injected close failure"), st.error)
+    val closed = fs.closed.toArray.toSeq
+    assert(closed.contains("f.txt.stderr"), s"stderr stream not closed: $closed")
+    assert(closed.contains("f.txt"), s"stdout stream not closed: $closed")
+    val residue = Files.walk(dst).iterator()
+    val files = Iterator.continually(residue).takeWhile(_.hasNext).map(_.next())
+      .filter(p => Files.isRegularFile(p)).map(_.toString).toList
+    assert(files.isEmpty, s"tmp residue or published output: $files")
+  }
+
   test("speculation race: two attempts of one file — last rename wins, no partial output") {
     // The R15/R20 claim driven adversarially: Spark speculation runs the
     // SAME file in two concurrent attempts. Each writes an
@@ -254,8 +282,7 @@ class DistExecJobSpec extends AnyFunSuite with SparkSpec {
         new Thread(() => {
           barrier.await()
           results.add(DistExecJob.executeOne(conf, dstFs, entry, dst.toString,
-            tmpRoot, attempt, "cat", redirectErrorToOut = false,
-            acceptExitCodes = Set(0), special = false))
+            tmpRoot, attempt, "cat", redirectErrorToOut = false, special = false))
         })
       }
       threads.foreach(_.start()); threads.foreach(_.join())
@@ -272,5 +299,28 @@ class DistExecJobSpec extends AnyFunSuite with SparkSpec {
         .toList
       assert(tmps.isEmpty, s"round $round: tmp residue $tmps")
     }
+  }
+}
+
+/** Local filesystem whose stdout output streams (any name but
+  * `*.stderr`) throw on close, after really closing; records every
+  * closed stream's file name.
+  */
+class CloseFailingFileSystem extends org.apache.hadoop.fs.RawLocalFileSystem {
+  import org.apache.hadoop.fs.{FSDataOutputStream, Path}
+  val closed = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+  override def create(f: Path, overwrite: Boolean, bufferSize: Int, replication: Short,
+      blockSize: Long, progress: org.apache.hadoop.util.Progressable): FSDataOutputStream = {
+    val inner = super.create(f, overwrite, bufferSize, replication, blockSize, progress)
+    new FSDataOutputStream(new java.io.OutputStream {
+      override def write(b: Int): Unit = inner.write(b)
+      override def write(b: Array[Byte], off: Int, len: Int): Unit = inner.write(b, off, len)
+      override def flush(): Unit = inner.flush()
+      override def close(): Unit = {
+        inner.close()
+        closed.add(f.getName)
+        if (!f.getName.endsWith(".stderr")) throw new java.io.IOException("injected close failure")
+      }
+    }, null)
   }
 }

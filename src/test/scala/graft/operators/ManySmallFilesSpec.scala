@@ -33,19 +33,4 @@ class ManySmallFilesSpec extends AnyFunSuite with SparkSpec {
     val f42 = new java.io.File(dst, "f0042.txt")
     assert(new String(Files.readAllBytes(f42.toPath)) == "file-42:" + ("x" * 42))
   }
-
-  test("fully distributed path: listDistributed manifest into runManifest") {
-    val src = Files.createTempDirectory("dist-src").toFile
-    val deep = new java.io.File(src, "a/b/c"); deep.mkdirs()
-    Files.write(new java.io.File(src, "top.txt").toPath, "top".getBytes)
-    Files.write(new java.io.File(deep, "leaf.txt").toPath, "leaf".getBytes)
-    val dst = new java.io.File(Files.createTempDirectory("dist-dst").toFile, "out")
-
-    val manifest = graft.fs.Manifest.listDistributed(spark, Seq(src.getAbsolutePath))
-    val status = DistExecJob.runManifest(spark, manifest, dst.getAbsolutePath, "cat")
-    val c = DistExecJob.counters(status)
-    assert(c.executed == 2 && c.failed == 0)
-    assert(new String(Files.readAllBytes(new java.io.File(dst, "a/b/c/leaf.txt").toPath)) == "leaf")
-    assert(new String(Files.readAllBytes(new java.io.File(dst, "top.txt").toPath)) == "top")
-  }
 }
